@@ -744,8 +744,10 @@ of this file — they are the historical record of WHY the direct-IO
 serving path exists, not a re-measurement.
 
 Round 4 regressed cold first-pass p50 2.3x (0.207 -> 0.478 s)
-unattributed. `scripts/attr_cold_query.py` times each driver-path
-phase of a COLD query under the bench protocol; both HEADs measured
+unattributed. A one-off attribution script (since removed: the
+benchmark's traced run now splits a cold query into these phases)
+timed each driver-path phase of a COLD query under the bench
+protocol; both HEADs measured
 back-to-back in ONE drift window (a slow host phase — build wall ~34 s
 vs the ~12 s clean-window number — which only makes the per-job fixed
 cost MORE visible; the clean-window bench totals are quoted last):

@@ -101,15 +101,36 @@ def encode_doc_ids(doc_ids: np.ndarray) -> bytes:
     return varint_encode(codes)
 
 
-def decode_doc_ids(buf: bytes) -> np.ndarray:
+def decode_doc_ids(buf: bytes, block_lens=None) -> np.ndarray:
+    """Decode one encode_doc_ids buffer, or — with ``block_lens`` — the
+    concatenation of several, block i holding block_lens[i] ids and
+    restarting its own delta chain. Every buffer ends on a complete
+    varint, so the concatenated stream decodes in one pass; a count
+    that disagrees with ``sum(block_lens)`` means a truncated block."""
     codes = varint_decode(buf)
+    if block_lens is None:
+        lens = np.array([codes.size] if codes.size else [], dtype=np.int64)
+    else:
+        lens = np.asarray(block_lens, dtype=np.int64)
+        lens = lens[lens > 0]
+        if codes.size != int(lens.sum()):
+            raise ValueError(
+                f"decode_doc_ids: {codes.size} ids decoded for "
+                f"{int(lens.sum())} expected (corrupt posting block)"
+            )
     if codes.size == 0:
         return np.empty(0, dtype=np.int64)
-    first = zigzag_decode(codes[:1])[0]
-    # wrapping uint64 cumsum mirrors the wrapping delta in encode
+    starts = np.cumsum(lens) - lens
+    vals = codes.astype(_U64)
+    # wrapping uint64 cumsum mirrors the wrapping delta in encode; each
+    # block's first code is its zigzag'd absolute id, and subtracting
+    # the running total before the block restarts its chain
     with np.errstate(over="ignore"):
-        acc = np.cumsum(codes.astype(_U64), dtype=_U64)
-        acc += first.astype(_U64) - codes[0]
+        vals[starts] = zigzag_decode(codes[starts]).astype(_U64)
+        acc = np.cumsum(vals, dtype=_U64)
+        before = np.zeros(len(starts), dtype=_U64)
+        before[1:] = acc[starts[1:] - 1]
+        acc -= np.repeat(before, lens)
     return acc.astype(np.int64)
 
 

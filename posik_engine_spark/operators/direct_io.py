@@ -2,9 +2,9 @@
 
 Round-4 verdict item 1: the ordinal posting layout added a third Spark
 job to every cold query — the ord -> doc_id resolution of the <= ~k
-WAND survivors. Measured on the bench protocol (sf0.1, local[32],
-scripts/attr_cold_query.py), that job alone cost a median 0.29 s of the
-0.52 s cold total: NOT IO (the pruned scan touches a few KB) but fixed
+WAND survivors. Measured on the bench protocol (sf0.1, local[32]),
+that job alone cost a median 0.29 s of the 0.52 s cold total: NOT IO
+(the pruned scan touches a few KB) but fixed
 Spark job overhead — scheduling 32 tasks and planning an
 OR-of-isin predicate to read a dozen rows.
 

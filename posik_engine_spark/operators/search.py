@@ -21,7 +21,11 @@ from posik_engine_spark import spec
 from posik_engine_spark.functions.snippet import build_snippet, title_for_path
 from posik_engine_spark.functions.tokenizer import tokenize_py
 from posik_engine_spark.operators.index import Index, build_index
-from posik_engine_spark.operators.wand import wand_topk, wand_topk_driver
+from posik_engine_spark.operators.wand import (
+    decode_postings,
+    wand_topk,
+    wand_topk_driver,
+)
 from posik_engine_spark.oracle import SearchError
 
 RESULT_SCHEMA = (
@@ -195,14 +199,17 @@ class SearchEngine:
         # bounded lookup cache over distinct queried terms.
         self._term_cache: dict[str, tuple[float, int, int] | None] = {}
         self._dict_complete = False
-        # bounded LRU over collected compressed block rows, keyed by
-        # term (spec.DRIVER_BLOCK_CACHE_MAX_POSTINGS budget): hot terms
-        # of a Zipfian workload serve the driver-WAND path with zero
-        # index-scan jobs. Same staleness model as the persisted ix
-        # frames (an engine serves one index snapshot).
+        # bounded LRU over DECODED posting lists, keyed by term
+        # ({shard: wand.ShardPostings}; spec.DRIVER_BLOCK_CACHE_MAX_POSTINGS
+        # budget): a term's blocks are read and decoded once, when the
+        # cache is filled, and hot terms of a Zipfian workload then
+        # serve the driver-WAND path with zero index-scan jobs and no
+        # decode. Same staleness model as the persisted ix frames (an
+        # engine serves one index snapshot, so one avgdl for the
+        # cached block bounds).
         from collections import OrderedDict
 
-        self._block_cache: OrderedDict[str, list] = OrderedDict()
+        self._block_cache: OrderedDict[str, dict] = OrderedDict()
         self._block_cache_postings = 0
         # bounded LRU over fetched content rows keyed by doc_id
         # (spec.DRIVER_CONTENT_CACHE_MAX_BYTES budget): hot result docs
@@ -356,17 +363,17 @@ class SearchEngine:
         idfs = {t: v[0] for t, v in info.items()}
         dfs = {t: v[1] for t, v in info.items()}
         # serving hybrid (spec.DRIVER_WAND_MAX_POSTINGS): small posting
-        # volumes score locally on the collected blocks — identical
-        # results (same shard_topk kernel + merge order), one Spark scan
-        # instead of a grouped-map round trip; fat queries distribute.
+        # volumes score locally on the cached decoded postings —
+        # identical results (same topk_ords kernel + merge order), no
+        # grouped-map round trip; fat queries distribute.
         # Repo-SCOPED queries always distribute: the driver path would
         # collect the scoped repos' doc_stats, which the posting-volume
         # gate does not bound (a rare-term query against a 100M-doc repo
         # must not materialize that repo's doc table on the coordinator).
         if repos is None and sum(dfs.values()) <= spec.DRIVER_WAND_MAX_POSTINGS:
-            rows = self._blocks_for_terms(terms)
             return wand_topk_driver(
-                self.ix, idfs, dfs, k, rows=rows,
+                self.ix, idfs, dfs, k,
+                postings=self._postings_for_terms(terms),
                 resolver=self._docids_for_keys,
             )
         # scoped / fat queries: distributed per-shard WAND kernel +
@@ -454,35 +461,34 @@ class SearchEngine:
             have.update(fetched)
         return have
 
-    def _blocks_for_terms(self, terms: list[str]) -> list:
-        """Collected block rows for the query terms through the bounded
-        per-term LRU (``_cached_fetch``): misses run ONE pruned read for
-        all missing terms (driver-direct from the block files when the
-        index is file-backed, else a Spark scan); hits cost nothing;
-        terms absent from the index cache as empty lists so they are
-        never re-scanned."""
+    def _postings_for_terms(self, terms: list[str]) -> dict[str, dict]:
+        """Decoded posting lists ({shard: ShardPostings}) for the query
+        terms through the bounded per-term LRU (``_cached_fetch``):
+        misses run ONE pruned read for all missing terms (driver-direct
+        from the block files when the index is file-backed, else a
+        Spark scan) and ONE decode; hits cost nothing. Terms absent
+        from the index cache as empty dicts so they are never
+        re-scanned. A corrupt block raises from the decode, before
+        anything is inserted or charged to the budget."""
 
-        def fetch(missing: list[str]) -> dict[str, list]:
-            by_term: dict[str, list] = {t: [] for t in missing}
+        def fetch(missing: list[str]) -> dict[str, dict]:
             if self._direct is not None:
                 rows = self._direct.blocks_for_terms(missing)
             else:
                 rows = self.ix.blocks.filter(
                     F.col("term").isin(missing)
                 ).collect()
-            for r in rows:
-                by_term[r["term"]].append(r)
-            return by_term
+            decoded = decode_postings(rows, self.ix.meta.avgdl)
+            return {t: decoded.get(t, {}) for t in missing}
 
-        have = self._cached_fetch(
+        return self._cached_fetch(
             self._block_cache,
             "_block_cache_postings",
             spec.DRIVER_BLOCK_CACHE_MAX_POSTINGS,
             terms,
-            lambda rows: sum(r["n_docs"] for r in rows),
+            lambda shards: sum(len(p) for p in shards.values()),
             fetch,
         )
-        return [r for t in terms for r in have[t]]
 
     def close(self) -> None:
         """Release serving state: restore the session conf mutated in

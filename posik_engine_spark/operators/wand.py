@@ -35,11 +35,19 @@ filter needs ord→repo; the ord → doc_id resolution of the <= ~k
 survivors is a broadcast join (distributed path) or a cached driver
 point lookup (serving path). Per-shard top-k heaps merge on the driver
 via TakeOrderedAndProject — no cross-shard shuffle of postings, ever.
+
+One kernel, ``topk_ords``, runs every path over decoded posting lists
+(``ShardPostings``): the grouped-map UDF decodes its shard's frame per
+query (``shard_topk``); the serving path scores the lists SearchEngine
+decoded once, when the term entered its block cache, so a warm query
+pays neither a decode nor pandas indexing — each cost more than the
+scoring itself.
 """
 
 from __future__ import annotations
 
 import logging
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
@@ -66,160 +74,199 @@ _CHUNK = 1024  # max chunk size (numpy batch sweet spot)
 _CHUNK0 = 64  # first chunk ~ top-k heap size; the cut can fire after it
 
 
-def _decode_blocks(bpdf: pd.DataFrame, avgdl: float, lo: np.ndarray | None = None):
-    """Decode the blocks of one term, optionally pruned to blocks whose
-    ordinal range intersects candidate ords ``lo`` (sorted). Returns
-    (ords, tfp, tfc, ub_kernel, lenp, lenc) where ub_kernel is the
-    per-doc block bound kernel(max_tfp, max_tfc, min_lenp, min_lenc,
-    avgdl) and lenp/lenc are the inline per-doc field lengths."""
+# per-block integer metadata columns of ix.blocks
+_BLOCK_INTS = (
+    "n_docs", "ord_min", "ord_max", "max_tfp", "max_tfc", "min_lenp", "min_lenc",
+)
+
+
+@dataclass(frozen=True, slots=True)
+class ShardPostings:
+    """One term's decoded posting list in one shard.
+
+    ``ords`` ascend (int64); the four per-posting count streams are
+    stored int32 (tfs and field lengths are token counts) and meet
+    kernel_np as-is — int32 * float promotes to float64 exactly like
+    int64 does, so scores stay float-identical. Block metadata stays
+    per block: ``offsets`` (n_blocks + 1) delimit each block's
+    postings, ``ubk`` is the block bound kernel(max_tfp, max_tfc,
+    min_lenp, min_lenc, avgdl)."""
+
+    ords: np.ndarray
+    tfp: np.ndarray
+    tfc: np.ndarray
+    lenp: np.ndarray
+    lenc: np.ndarray
+    offsets: np.ndarray
+    ord_min: np.ndarray
+    ord_max: np.ndarray
+    ubk: np.ndarray
+
+    def __len__(self) -> int:
+        return len(self.ords)
+
+    def overlapping(self, cand: np.ndarray) -> np.ndarray:
+        """Positions of the postings in the blocks whose [ord_min,
+        ord_max] holds some of the sorted ordinals ``cand`` — the only
+        blocks a rarest-first intersection has to look at."""
+        keep = _overlaps(cand, self.ord_min, self.ord_max)
+        if keep.all():
+            return np.arange(len(self.ords))
+        lo = self.offsets[:-1][keep]
+        n = self.offsets[1:][keep] - lo
+        return np.arange(int(n.sum())) + np.repeat(lo - (np.cumsum(n) - n), n)
+
+    def block_of(self, pos: np.ndarray) -> np.ndarray:
+        return np.searchsorted(self.offsets, pos, side="right") - 1
+
+    @classmethod
+    def empty(cls) -> ShardPostings:
+        z = np.empty(0, dtype=np.int64)
+        return cls(z, z, z, z, z, np.zeros(1, dtype=np.int64), z, z, z * 0.0)
+
+
+def _overlaps(cand: np.ndarray, bmin, bmax) -> np.ndarray:
+    """Mask of the blocks [bmin, bmax] holding some of the sorted,
+    non-empty ordinals ``cand``."""
+    bmin, bmax = np.asarray(bmin, dtype=np.int64), np.asarray(bmax, dtype=np.int64)
+    left = np.searchsorted(cand, bmin, side="left")
+    return (left < len(cand)) & (cand[np.minimum(left, len(cand) - 1)] <= bmax)
+
+
+def decode_postings(blocks, avgdl: float) -> dict[str, dict[int, ShardPostings]]:
+    """Decode posting-block rows into {term: {shard: ShardPostings}}.
+
+    ``blocks`` is a pandas frame, or a list of pyspark Rows / dicts
+    (Spark collect, the direct pyarrow reads) — the columns of
+    ix.blocks either way. Every stream is decoded in ONE codec call
+    over the concatenated blocks: each block buffer ends on a complete
+    varint and each doc-id block restarts its delta chain, so the
+    concatenation decodes to the concatenated arrays. A truncated
+    block shifts every later value, so the decoded counts no longer
+    add up to the blocks' n_docs and the decode raises ValueError."""
     from posik_engine_spark.functions import codec
 
-    if lo is not None and len(bpdf):
-        bmin = bpdf["ord_min"].to_numpy(np.int64)
-        bmax = bpdf["ord_max"].to_numpy(np.int64)
-        # block overlaps candidates iff some candidate in [bmin, bmax]
-        left = np.searchsorted(lo, bmin, side="left")
-        keep = (left < len(lo)) & (lo[np.minimum(left, len(lo) - 1)] <= bmax)
-        bpdf = bpdf[keep]
-    if not len(bpdf):
-        z = np.empty(0, dtype=np.int64)
-        return z, z, z, np.empty(0, dtype=np.float64), z, z
-    # one column extraction + ONE vectorized bound-kernel call for all
-    # blocks: itertuples + per-block 1-element kernel calls dominated
-    # the warm serving profile (pandas row machinery, not the actual
-    # varint decode). Elementwise kernel_np over the block-metadata
-    # vectors is float-identical to the per-block scalar calls.
-    # ordinals decode per block (each block restarts its delta chain);
-    # the four count streams have NO cross-value state, and every block
-    # buffer ends on a complete varint, so the CONCATENATED streams
-    # decode to exactly the concatenated arrays — one decode call each
-    # instead of one per block
-    ids_parts = [codec.decode_doc_ids(b) for b in bpdf["docs"].tolist()]
-    tfp = codec.decode_counts(b"".join(bpdf["tfp"].tolist()))
-    tfc = codec.decode_counts(b"".join(bpdf["tfc"].tolist()))
-    lenp = codec.decode_counts(b"".join(bpdf["lenp"].tolist()))
-    lenc = codec.decode_counts(b"".join(bpdf["lenc"].tolist()))
-    lens = np.array([len(x) for x in ids_parts], dtype=np.int64)
-    n_post = int(lens.sum())
-    if not (len(tfp) == len(tfc) == len(lenp) == len(lenc) == n_post):
-        # per-block decode caught a truncated buffer via its final
-        # continuation bit; in a concatenated stream a mid-stream
-        # truncation merges into the next block's varints instead —
-        # the total count is the restored detector
+    if isinstance(blocks, pd.DataFrame):
+        cols = {c: blocks[c].tolist() for c in blocks.columns}
+    else:
+        rows = [r.asDict() if hasattr(r, "asDict") else r for r in blocks]
+        cols = {c: [r[c] for r in rows] for c in rows[0]} if rows else {}
+    if not cols or not cols["term"]:
+        return {}
+    codes: dict[str, int] = {}
+    tcode = np.array([codes.setdefault(t, len(codes)) for t in cols["term"]])
+    shard = np.asarray(cols["shard"], dtype=np.int64)
+    order = np.lexsort((np.asarray(cols["block_id"], dtype=np.int64), shard, tcode))
+    tcode, shard = tcode[order], shard[order]
+    meta = {c: np.asarray(cols[c], dtype=np.int64)[order] for c in _BLOCK_INTS}
+    n_docs = meta["n_docs"]
+
+    def joined(c: str) -> bytes:
+        col = cols[c]
+        return b"".join([col[i] for i in order])
+
+    ids = codec.decode_doc_ids(joined("docs"), n_docs)
+    streams = [codec.decode_counts(joined(c)) for c in ("tfp", "tfc", "lenp", "lenc")]
+    if any(len(s) != len(ids) for s in streams):
         raise ValueError(
             "posting block count streams misaligned with doc ids "
             "(corrupt posting block)"
         )
     ubk = kernel_np(
-        bpdf["max_tfp"].to_numpy(np.int64),
-        bpdf["max_tfc"].to_numpy(np.int64),
-        bpdf["min_lenp"].to_numpy(np.int64),
-        bpdf["min_lenc"].to_numpy(np.int64),
-        avgdl,
+        meta["max_tfp"], meta["max_tfc"], meta["min_lenp"], meta["min_lenc"], avgdl
     )
-    return (
-        np.concatenate(ids_parts),
-        tfp,
-        tfc,
-        np.repeat(ubk, lens),
-        lenp,
-        lenc,
-    )
+    offsets = np.concatenate(([0], np.cumsum(n_docs)))
+    names = list(codes)
+    out: dict[str, dict[int, ShardPostings]] = {}
+    for a, b in _runs(tcode, 0, len(order)):
+        # copy each term's postings out of the shared decode buffers,
+        # so evicting a term frees its memory; shards are views into it
+        p0, p1 = offsets[a], offsets[b]
+        arrs = [ids[p0:p1].copy()] + [s[p0:p1].astype(np.int32) for s in streams]
+        shards = out[names[tcode[a]]] = {}
+        for h0, h1 in _runs(shard, a, b):
+            q0, q1 = offsets[h0] - p0, offsets[h1] - p0
+            shards[int(shard[h0])] = ShardPostings(
+                *[x[q0:q1] for x in arrs],
+                offsets=offsets[h0 : h1 + 1] - offsets[h0],
+                ord_min=meta["ord_min"][h0:h1].copy(),
+                ord_max=meta["ord_max"][h0:h1].copy(),
+                ubk=ubk[h0:h1].copy(),
+            )
+    return out
 
 
-def shard_topk(
-    blocks_pdf: pd.DataFrame,
-    stats_pdf: pd.DataFrame | None,
+def _runs(key: np.ndarray, a: int, b: int):
+    """[start, end) ranges of equal ``key`` values within key[a:b]."""
+    cut = np.flatnonzero(np.diff(key[a:b])) + 1 + a
+    edges = [a, *cut.tolist(), b]
+    return zip(edges[:-1], edges[1:])
+
+
+_NO_HITS = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
+
+
+def topk_ords(
+    posts: list[ShardPostings],
     terms_rarest_first: list[str],
     idfs: dict[str, float],
     avgdl: float,
     k: int,
-    repos: list[str] | None = None,
+    scope: np.ndarray | None = None,
     diag: dict | None = None,
-) -> pd.DataFrame:
-    """Pure-pandas/numpy shard-local block-max WAND (unit-testable
-    without Spark; the grouped-map UDF delegates here). Operates
-    entirely in ORDINAL space; returns (ord, score) rows.
+) -> tuple[np.ndarray, np.ndarray]:
+    """Shard-local block-max WAND in ordinal space over the decoded
+    posting lists of the query terms (``posts`` aligned with
+    ``terms_rarest_first``). Returns (ords, scores) in (score desc,
+    ord asc) order, KEEPING the ties at the kth score (see shard_topk).
 
-    Returns the top-k KEEPING score ties at the boundary (possibly
-    more than k rows): the global tie-break is on the external doc_id,
-    which this kernel never sees — the caller resolves survivors'
-    ordinals and applies the exact (score desc, doc_id asc) cut. Any
-    row dropped here has >= k strictly-higher-scored docs in this
-    shard alone, so it can never enter the global top-k.
-
-    ``stats_pdf`` is only required when ``repos`` scoping is requested;
-    field lengths come from the blocks themselves. Pass ``diag={}`` to
-    collect pruning counters (postings_decoded, candidates,
-    candidates_scored) — the effectiveness tests use them; the UDF path
-    passes nothing.
-    """
-    empty = pd.DataFrame({"ord": pd.Series(dtype="int64"),
-                          "score": pd.Series(dtype="float64")})
+    ``scope`` (sorted ordinals) restricts the candidates to a repo
+    scope. ``diag`` collects the pruning counters: postings_decoded
+    (postings in the blocks the intersection has to look at),
+    candidates, candidates_scored, tie_overflow."""
     if k <= 0:
         # the scoring loop's kth-score selection assumes k >= 1
         # (np.partition at len-k); an empty window wants no rows anyway
-        return empty
-    if repos is not None and (stats_pdf is None or not len(stats_pdf)):
-        # the registry side arrives pre-filtered to the scoped repos: a
-        # shard can hold the query terms' blocks while the scope owns
-        # none of its docs — nothing can match, skip the decode outright
-        return empty
-    by_term = dict(tuple(blocks_pdf.groupby("term", sort=False)))
-    if any(t not in by_term for t in terms_rarest_first):
-        return empty  # AND: some term absent from this shard entirely
-
-    # --- rarest-first intersection with block-range pruning
-    t0 = terms_rarest_first[0]
-    cand, tfp0, tfc0, maxk0, lenp, lenc = _decode_blocks(
-        by_term[t0].sort_values("block_id", kind="mergesort"), avgdl
-    )
-    aligned: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray]] = {
-        t0: (tfp0, tfc0, maxk0)
-    }
+        return _NO_HITS
+    # --- rarest-first intersection with block-range pruning; pos[i]
+    # holds the positions of the candidates in posts[i]'s arrays
+    cand = posts[0].ords
+    pos = [np.arange(len(cand))]
     if diag is not None:
         diag["postings_decoded"] = len(cand)
-    for t in terms_rarest_first[1:]:
-        ids_t, tfp_t, tfc_t, maxk_t, _, _ = _decode_blocks(
-            by_term[t].sort_values("block_id", kind="mergesort"), avgdl, lo=cand
-        )
+    for p in posts[1:]:
+        sel = p.overlapping(cand)
         if diag is not None:
-            diag["postings_decoded"] = diag["postings_decoded"] + len(ids_t)
+            diag["postings_decoded"] = diag["postings_decoded"] + len(sel)
         common, ia, ib = np.intersect1d(
-            cand, ids_t, assume_unique=True, return_indices=True
+            cand, p.ords[sel], assume_unique=True, return_indices=True
         )
         if len(common) == 0:
-            return empty
-        for prev, (a, b, c) in aligned.items():
-            aligned[prev] = (a[ia], b[ia], c[ia])
-        lenp, lenc = lenp[ia], lenc[ia]
-        aligned[t] = (tfp_t[ib], tfc_t[ib], maxk_t[ib])
+            return _NO_HITS
+        pos = [q[ia] for q in pos] + [sel[ib]]
         cand = common
 
-    # --- optional repo scoping via the pre-filtered registry's ords
-    # (ordinals are (repo, path)-ordered, so a scope is a contiguous
-    # ordinal range per shard — the membership test below is a sorted
-    # searchsorted over it)
-    if repos is not None:
-        sids = np.sort(stats_pdf["ord"].to_numpy(np.int64), kind="mergesort")
-        pos = np.searchsorted(sids, cand)
-        found = (pos < len(sids)) & (sids[np.minimum(pos, len(sids) - 1)] == cand)
+    # --- optional repo scoping (ordinals are (repo, path)-ordered, so
+    # a scope is a contiguous ordinal range per shard — the membership
+    # test below is a sorted searchsorted over it)
+    if scope is not None:
+        at = np.searchsorted(scope, cand)
+        found = (at < len(scope)) & (scope[np.minimum(at, len(scope) - 1)] == cand)
         if not found.all():
             cand = cand[found]
-            lenp, lenc = lenp[found], lenc[found]
-            aligned = {
-                t: (a[found], b[found], c[found]) for t, (a, b, c) in aligned.items()
-            }
+            pos = [q[found] for q in pos]
         if len(cand) == 0:
-            return empty
+            return _NO_HITS
 
     # --- block-max upper bounds + chunked early-terminated scoring
     ub = np.zeros(len(cand), dtype=np.float64)
-    for t in terms_rarest_first:
-        ub += idfs[t] * aligned[t][2]
+    for t, p, q in zip(terms_rarest_first, posts, pos):
+        ub += idfs[t] * p.ubk[p.block_of(q)]
     by_ub = np.argsort(-ub, kind="mergesort")
 
+    by_term = dict(zip(terms_rarest_first, zip(posts, pos)))
     terms_asc = sorted(terms_rarest_first)  # score fold order (spec.py)
+    p0, q0 = posts[0], pos[0]  # per-doc field lengths ride on every list
     scored_idx: list[np.ndarray] = []
     scored_val: list[np.ndarray] = []
     n_scored = 0
@@ -232,12 +279,13 @@ def shard_topk(
         size = min(size * 2, _CHUNK)
         if n_scored >= k and ub[chunk[0]] < kth:
             break  # WAND cut: no remaining candidate can reach the top-k
+        at0 = q0[chunk]
+        lenp, lenc = p0.lenp[at0], p0.lenc[at0]
         acc = np.zeros(len(chunk), dtype=np.float64)
         for t in terms_asc:
-            tfp_t, tfc_t, _ = aligned[t]
-            acc = acc + idfs[t] * kernel_np(
-                tfp_t[chunk], tfc_t[chunk], lenp[chunk], lenc[chunk], avgdl
-            )
+            p, q = by_term[t]
+            at = q[chunk]
+            acc = acc + idfs[t] * kernel_np(p.tfp[at], p.tfc[at], lenp, lenc, avgdl)
         scored_idx.append(chunk)
         scored_val.append(acc)
         n_scored += len(chunk)
@@ -275,7 +323,63 @@ def shard_topk(
         if diag is not None:
             diag["tie_overflow"] = diag.get("tie_overflow", 0) + 1
         order = order[:cap]
-    return pd.DataFrame({"ord": cand[idx][order], "score": val[order]})
+    return cand[idx][order], val[order]
+
+
+def shard_topk(
+    blocks_pdf: pd.DataFrame,
+    stats_pdf: pd.DataFrame | None,
+    terms_rarest_first: list[str],
+    idfs: dict[str, float],
+    avgdl: float,
+    k: int,
+    repos: list[str] | None = None,
+    diag: dict | None = None,
+) -> pd.DataFrame:
+    """Shard-local block-max WAND over one shard's block rows (the
+    grouped-map UDF delegates here; unit-testable without Spark):
+    decodes the frame and runs topk_ords. Returns (ord, score) rows.
+
+    Returns the top-k KEEPING score ties at the boundary (possibly
+    more than k rows): the global tie-break is on the external doc_id,
+    which this kernel never sees — the caller resolves survivors'
+    ordinals and applies the exact (score desc, doc_id asc) cut. Any
+    row dropped here has >= k strictly-higher-scored docs in this
+    shard alone, so it can never enter the global top-k.
+
+    ``stats_pdf`` is only required when ``repos`` scoping is requested;
+    field lengths come from the blocks themselves. Pass ``diag={}`` to
+    collect pruning counters (postings_decoded, candidates,
+    candidates_scored) — the effectiveness tests use them; the UDF path
+    passes nothing.
+    """
+    if repos is not None and (stats_pdf is None or not len(stats_pdf)):
+        # a scoped shard whose pre-filtered registry side is empty owns
+        # none of the scope's docs: nothing can match, skip the decode
+        return _hits_frame(_NO_HITS)
+    terms = terms_rarest_first
+    term_col = blocks_pdf["term"]
+    if not set(terms) <= set(term_col):
+        return _hits_frame(_NO_HITS)  # AND: some term absent from this shard
+    # decode the rarest list whole, the others only where their blocks
+    # overlap it: a block outside its ordinals cannot hold an AND match,
+    # and the kernel's own block pruning only ever looks inside that set
+    (p0,) = decode_postings(blocks_pdf[term_col == terms[0]], avgdl)[terms[0]].values()
+    rest = blocks_pdf[term_col != terms[0]]
+    rest = rest[_overlaps(p0.ords, rest["ord_min"], rest["ord_max"])]
+    by_term = decode_postings(rest, avgdl)
+    posts = [p0] + [
+        next(iter(by_term[t].values())) if t in by_term else ShardPostings.empty()
+        for t in terms[1:]
+    ]
+    scope = None
+    if repos is not None:
+        scope = np.sort(stats_pdf["ord"].to_numpy(np.int64), kind="mergesort")
+    return _hits_frame(topk_ords(posts, terms, idfs, avgdl, k, scope, diag))
+
+
+def _hits_frame(hits: tuple[np.ndarray, np.ndarray]) -> pd.DataFrame:
+    return pd.DataFrame({"ord": hits[0], "score": hits[1]})
 
 
 def _resolve_ords_spark(ix: Index, keys: list[tuple[int, int]]) -> dict:
@@ -314,8 +418,9 @@ def _resolve_ords_spark(ix: Index, keys: list[tuple[int, int]]) -> dict:
     return {(int(r["shard"]), int(r["ord"])): int(r["doc_id"]) for r in rows}
 
 
-def _finalize_topk(parts: list[pd.DataFrame], k: int, resolver) -> list:
-    """Merge per-shard ties-kept frames (each with a ``shard`` col),
+def _finalize_topk(parts: list, k: int, resolver) -> list:
+    """Merge per-shard ties-kept parts (mappings with ``shard``,
+    ``ord`` and ``score`` columns: pandas frames or dicts of arrays),
     apply a global keep-ties pre-cut, resolve ord -> doc_id through
     ``resolver(keys) -> {(shard, ord): doc_id}``, and take the exact
     global top-k by (score desc, doc_id asc). Returns Row(doc_id,
@@ -324,17 +429,20 @@ def _finalize_topk(parts: list[pd.DataFrame], k: int, resolver) -> list:
 
     if not parts:
         return []
-    merged = pd.concat(parts, ignore_index=True)
-    if merged.empty:
+    shard, ords, val = (
+        np.concatenate([np.asarray(p[c], dtype=dt) for p in parts])
+        for c, dt in (("shard", np.int64), ("ord", np.int64), ("score", np.float64))
+    )
+    if not len(val):
         return []
-    val = merged["score"].to_numpy(np.float64)
     if len(val) > k:
         # shrink the resolution set before the lookup: only rows that
         # can still reach the top-k (score >= global kth) need doc_ids
         kth = np.partition(val, len(val) - k)[len(val) - k]
-        merged = merged[val >= kth]
+        keep = val >= kth
+        shard, ords, val = shard[keep], ords[keep], val[keep]
     cap = spec.WAND_TIE_CAP_FACTOR * k
-    if len(merged) > cap:
+    if len(val) > cap:
         # global twin of the shard-local keep-ties cap: bound the
         # resolution/lookup set when the global kth-score tie group
         # overflows (deterministic (score desc, shard, ord) truncation;
@@ -342,13 +450,11 @@ def _finalize_topk(parts: list[pd.DataFrame], k: int, resolver) -> list:
         log.warning(
             "wand merge: global kth-score tie group overflows the "
             "keep-ties cap (%d survivors > %d); boundary ties break by "
-            "(shard, ord), not doc_id", len(merged), cap,
+            "(shard, ord), not doc_id", len(val), cap,
         )
-        merged = merged.sort_values(
-            ["score", "shard", "ord"], ascending=[False, True, True],
-            kind="mergesort",
-        ).head(cap)
-    keys = list(zip(merged["shard"].astype(int), merged["ord"].astype(int)))
+        top = np.lexsort((ords, shard, -val))[:cap]
+        shard, ords, val = shard[top], ords[top], val[top]
+    keys = list(zip(shard.tolist(), ords.tolist()))
     idmap = resolver(keys)
     missing = [key for key in keys if key not in idmap]
     if missing:
@@ -356,12 +462,7 @@ def _finalize_topk(parts: list[pd.DataFrame], k: int, resolver) -> list:
             f"wand top-k: {len(missing)} scored ordinals missing from "
             f"doc_stats (index corrupt or stale), e.g. {missing[:3]}"
         )
-    out = sorted(
-        (
-            (-float(s), idmap[(int(sh), int(o))])
-            for sh, o, s in zip(merged["shard"], merged["ord"], merged["score"])
-        )
-    )[:k]
+    out = sorted((-s, idmap[key]) for key, s in zip(keys, val.tolist()))[:k]
     return [Row(doc_id=d, score=-negs) for negs, d in out]
 
 
@@ -372,11 +473,11 @@ def wand_topk_driver(
     k: int,
     repos: list[str] | None = None,
     diag: dict | None = None,
-    rows: list | None = None,
     resolver=None,
+    postings: dict[str, dict[int, ShardPostings]] | None = None,
 ) -> list:
-    """Driver-local top-k over the query terms' collected blocks —
-    result-identical to wand_topk (same shard_topk kernel per shard,
+    """Driver-local top-k over the query terms' posting lists —
+    result-identical to wand_topk (same topk_ords kernel per shard,
     same merge + tie-break), minus the grouped-map round trip.
 
     The Lucene-style serving hybrid: an interactive query touches only
@@ -388,6 +489,11 @@ def wand_topk_driver(
     is the serving coordinator — the same place the per-shard top-k
     heaps merge in the distributed path anyway.
 
+    ``postings`` passes the terms' decoded lists per shard
+    (SearchEngine's per-term cache: a hit serves with no index scan and
+    no decode); without it the blocks are collected with one pruned
+    Spark scan and decoded here.
+
     ``resolver(keys) -> {(shard, ord): doc_id}`` maps the <= ~k
     surviving ordinals to external doc_ids for the global tie-break;
     default is one pruned doc_stats point lookup (SearchEngine passes
@@ -395,8 +501,8 @@ def wand_topk_driver(
     Spark jobs).
 
     Repo-scoped queries collect doc_stats pre-filtered to the scoped
-    repos: shard_topk's membership test (candidate ord present in the
-    filtered frame) is exact. CAVEAT: that collect is proportional to
+    repos: the kernel's membership test (candidate ord present in the
+    filtered ords) is exact. CAVEAT: that collect is proportional to
     the scoped repos' DOC COUNT, which the posting-volume gate does not
     bound — SearchEngine therefore routes scoped queries to the
     distributed path and uses this function only unscoped; the scoped
@@ -408,48 +514,46 @@ def wand_topk_driver(
         raise ValueError("wand_topk_driver: empty term list")
     avgdl = ix.meta.avgdl
     idfs = dict(term_idfs)
-    if rows is None:
+    if postings is None:
         rows = ix.blocks.filter(F.col("term").isin(terms)).collect()
-    # else: caller pre-fetched the terms' block rows (SearchEngine's
-    # bounded per-term cache — a hit serves with zero index-scan jobs)
-    if not rows:
+        postings = decode_postings(rows, avgdl)
+    by_term = [postings.get(t, {}) for t in terms]
+    if not any(by_term):
         return []
-    # rows come as pyspark Rows (Spark collect) or plain dicts (the
-    # engine's direct pyarrow reads) — same columns either way
-    bpdf = pd.DataFrame(
-        [r.asDict() if hasattr(r, "asDict") else r for r in rows]
-    )
     if diag is not None:
         # postings_total = what a no-pruning engine would decode+score
         # (every posting of every query term); per-shard kernels add
         # postings_decoded / candidates / candidates_scored below —
         # the across-rounds WAND-effectiveness counters (bench.py)
-        diag["postings_total"] = diag.get("postings_total", 0) + int(
-            bpdf["n_docs"].sum()
+        diag["postings_total"] = diag.get("postings_total", 0) + sum(
+            len(p) for shards in by_term for p in shards.values()
         )
-    stats_by_shard: dict[int, pd.DataFrame] = {}
+    scopes: dict[int, list[int]] = {}
     if repos is not None:
-        srows = (
+        for r in (
             ix.doc_stats.filter(F.col("repo").isin(list(repos)))
-            .select("shard", "ord", "repo")
+            .select("shard", "ord")
             .collect()
-        )
-        sdf = pd.DataFrame(
-            [r.asDict() for r in srows], columns=["shard", "ord", "repo"]
-        )
-        stats_by_shard = {s: g for s, g in sdf.groupby("shard")} if len(sdf) else {}
+        ):
+            scopes.setdefault(int(r["shard"]), []).append(int(r["ord"]))
     parts = []
-    for shard, pdf in bpdf.groupby("shard", sort=False):
+    for shard in sorted(set().union(*by_term)):
+        scope = None
         if repos is not None:
-            spdf = stats_by_shard.get(shard)
-            if spdf is None:
+            if shard not in scopes:
                 continue  # scoped repos have no docs in this shard
-        else:
-            spdf = None
+            scope = np.sort(np.array(scopes[shard], dtype=np.int64))
         sdiag: dict | None = {} if diag is not None else None
-        part = shard_topk(pdf, spdf, terms, idfs, avgdl, k, repos=repos, diag=sdiag)
-        if len(part):
-            parts.append(part.assign(shard=int(shard)))
+        # AND: a shard missing some term entirely has no hits
+        if all(shard in shards for shards in by_term):
+            ords, scores = topk_ords(
+                [shards[shard] for shards in by_term], terms, idfs, avgdl, k,
+                scope, sdiag,
+            )
+            if len(ords):
+                parts.append(
+                    {"shard": np.full(len(ords), shard), "ord": ords, "score": scores}
+                )
         if diag is not None:
             for key in (
                 "postings_decoded",

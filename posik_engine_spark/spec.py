@@ -62,12 +62,18 @@ DRIVER_DICT_MAX_TERMS: int = 1_000_000
 # interactive p50 path); fatter queries scatter per-shard tasks. At
 # ~2-4 varint bytes/posting this bounds the collect at a few MB.
 DRIVER_WAND_MAX_POSTINGS: int = 2_000_000
-# Bounded LRU over the driver-WAND path's collected compressed blocks,
-# keyed by term and budgeted in POSTINGS (the same unit as the gate
-# above; delta+varint ≈ 2-4 bytes/posting, so the cap bounds heap at a
-# few MB). Zipf-distributed query workloads re-ask the same hot terms:
-# a cache hit serves the query with ZERO index-scan jobs (the
-# Lucene-style hot posting-list cache; content fetch still runs).
+# Bounded LRU over the driver-WAND path's DECODED posting lists, keyed
+# by term and budgeted in POSTINGS (the same unit as the gate above).
+# A term's blocks are decoded once, when it enters the cache. Decoded,
+# a posting costs 24 bytes (int64 ordinal + four int32 counts) plus
+# 32 bytes per 128-posting block, so long lists approach ~24 B and a
+# full cache ~100 MB. Short lists pay a fixed ~1 KB of numpy headers
+# per (term, shard): on the 6k-doc serve_zipf corpus's warm cache
+# (284 terms, 18k postings, 4 shards) it measured 66 B/posting, against
+# 44 B for the compressed block rows cached before. Zipf-distributed
+# query workloads re-ask the same hot terms: a cache hit serves the
+# query with ZERO index-scan jobs and no decode (the Lucene-style hot
+# posting-list cache; content fetch still runs).
 DRIVER_BLOCK_CACHE_MAX_POSTINGS: int = 4_000_000
 # Bounded LRU over fetched content rows (snippet assembly), budgeted in
 # CONTENT BYTES. Result distributions are Zipfian like query terms: hot

@@ -55,3 +55,26 @@ def test_compression_is_real():
     ids = np.cumsum(np.random.default_rng(7).integers(1, 50, 10_000)).astype(np.int64)
     enc = codec.encode_doc_ids(ids)
     assert len(enc) < 2 * len(ids)  # ~1 byte/delta for gaps < 128
+
+
+@given(st.lists(st.sets(i64, min_size=1, max_size=60), max_size=8))
+@settings(max_examples=200, deadline=None)
+def test_concatenated_doc_id_blocks(blocks):
+    """Blocks decoded in one call equal the blocks decoded one by one;
+    each restarts its own delta chain, whatever the previous block's
+    last id."""
+    runs = [np.array(sorted(b), dtype=np.int64) for b in blocks]
+    buf = b"".join(codec.encode_doc_ids(r) for r in runs)
+    got = codec.decode_doc_ids(buf, [len(r) for r in runs])
+    assert got.tolist() == [v for r in runs for v in r.tolist()]
+
+
+def test_truncated_block_in_concatenation_rejected():
+    import pytest
+
+    runs = [np.arange(b, b + 200, dtype=np.int64) * 1000 for b in (0, 10**6, 10**9)]
+    bufs = [codec.encode_doc_ids(r) for r in runs]
+    for cut in (1, 2):
+        bad = bufs[0] + bufs[1][:-cut] + bufs[2]
+        with pytest.raises(ValueError, match="corrupt posting block"):
+            codec.decode_doc_ids(bad, [len(r) for r in runs])

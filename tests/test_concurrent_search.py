@@ -50,7 +50,7 @@ def _run_concurrent(eng, expected, rounds=4, threads_per_query=2):
 def _accounting_ok(eng):
     with eng._cache_lock:
         actual = sum(
-            r["n_docs"] for rows in eng._block_cache.values() for r in rows
+            len(p) for shards in eng._block_cache.values() for p in shards.values()
         )
         return eng._block_cache_postings == actual
 

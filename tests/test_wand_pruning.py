@@ -66,12 +66,14 @@ def _shard() -> pd.DataFrame:
     rows = _blocks_for("hot", ids, hot_tfc, lenc) + _blocks_for(
         "rare", rare_ids, rare_tfc, lenc[rare_ids]
     )
-    cols = [
-        "term", "shard", "block_id", "n_docs", "ord_min", "ord_max",
-        "max_tfp", "max_tfc", "min_lenp", "min_lenc",
-        "docs", "tfp", "tfc", "lenp", "lenc",
-    ]
-    return pd.DataFrame(rows, columns=cols)
+    return pd.DataFrame(rows, columns=COLS)
+
+
+COLS = [
+    "term", "shard", "block_id", "n_docs", "ord_min", "ord_max",
+    "max_tfp", "max_tfc", "min_lenp", "min_lenc",
+    "docs", "tfp", "tfc", "lenp", "lenc",
+]
 
 
 AVGDL = 80.0
@@ -204,3 +206,60 @@ def test_driver_wand_diag_on_real_index(spark):
     assert diag["postings_total"] >= diag["postings_decoded"] > 0
     assert diag["postings_decoded"] >= diag["candidates"] >= diag["candidates_scored"]
     assert diag["candidates_scored"] > 0
+
+
+def _sharded(n_shards: int = 4) -> pd.DataFrame:
+    """The same postings split into contiguous ordinal ranges, one
+    shard each (ordinals stay global: a shard's lists only need to
+    ascend)."""
+    ids = np.arange(N_DOCS, dtype=np.int64)
+    lenc = _lens()
+    hot_tfc = np.ones(N_DOCS, dtype=np.int64)
+    hot_tfc[5] = 50
+    rare = np.zeros(N_DOCS, dtype=bool)
+    rare[::RARE_EVERY] = True
+    frames = []
+    for s, part in enumerate(np.array_split(ids, n_shards)):
+        r = part[rare[part]]
+        rows = _blocks_for("hot", part, hot_tfc[part], lenc[part]) + _blocks_for(
+            "rare", r, np.ones(len(r), dtype=np.int64), lenc[r]
+        )
+        frames.append(pd.DataFrame(rows, columns=COLS).assign(shard=s))
+    return pd.concat(frames, ignore_index=True)
+
+
+def test_driver_diag_equals_summed_shard_diags():
+    """wand_topk_driver's counters are shard_topk's summed over the
+    shards (postings_total aside: every posting of the query terms),
+    and its result is shard_topk's parts merged by _finalize_topk."""
+    from types import SimpleNamespace
+
+    blocks = _sharded()
+    ix = SimpleNamespace(meta=SimpleNamespace(avgdl=AVGDL))
+    identity = lambda keys: {key: key[1] for key in keys}  # noqa: E731
+    n_rare = int(blocks.loc[blocks["term"] == "rare", "n_docs"].sum())
+    dfs = {"rare": n_rare, "hot": N_DOCS}
+    keys = ("postings_decoded", "candidates", "candidates_scored", "tie_overflow")
+    for terms in (["rare", "hot"], ["hot"]):
+        idfs = {t: IDFS[t] for t in terms}
+        mine = blocks[blocks["term"].isin(terms)]
+        want = dict.fromkeys(keys, 0)
+        parts = []
+        for shard, g in mine.groupby("shard"):
+            sdiag: dict = {}
+            parts.append(
+                wand.shard_topk(g, None, terms, idfs, AVGDL, 10, diag=sdiag)
+                .assign(shard=shard)
+            )
+            for key in keys:
+                want[key] += sdiag.get(key, 0)
+        want["postings_total"] = int(mine["n_docs"].sum())
+        for blocks_in in (mine, mine.to_dict("records")):
+            diag: dict = {}
+            got = wand.wand_topk_driver(
+                ix, idfs, dfs, 10, diag=diag, resolver=identity,
+                postings=wand.decode_postings(blocks_in, AVGDL),
+            )
+            assert diag == want, (terms, diag, want)
+            assert got == wand._finalize_topk(parts, 10, identity)
+        assert want["candidates_scored"] > 0
