@@ -61,11 +61,12 @@ def save_content_store(
 class ContentStore:
     """Point-lookup handle over a save_content_store dir.
 
-    ``fetch`` serves driver-direct from the parquet files (pyarrow:
-    bucket hive pruning + doc_id row-group pruning — single-digit ms)
-    when the dir is local, falling back to the pruned Spark plan
-    otherwise; ``direct=False`` forces the Spark path (equivalence is
-    test-pinned). ``lookup_plan`` stays the distributed access path for
+    ``fetch`` serves driver-direct from the parquet files (pyarrow over
+    files pinned at construction: bucket pruning + doc_id row-group
+    pruning, sub-millisecond) when the dir is local, falling back to
+    the pruned Spark plan otherwise; ``direct=False`` forces the Spark
+    path (equivalence is test-pinned). ``close()`` releases the pinned
+    files. ``lookup_plan`` stays the distributed access path for
     callers composing it into bigger plans."""
 
     def __init__(self, spark: SparkSession, path: str, direct: bool = True):
@@ -80,6 +81,12 @@ class ContentStore:
             )
 
             self._direct = DirectContentReader(path, self.n_buckets)
+
+    def close(self) -> None:
+        """Release the direct reader's pinned files (the Spark path
+        holds none)."""
+        if self._direct is not None:
+            self._direct.close()
 
     def lookup_plan(self, ids: list[int]) -> DataFrame:
         """The pruned-scan plan for a batch of doc_ids: bucket IN (...)

@@ -28,6 +28,20 @@ from posik_engine_spark.operators.wand import (
 )
 from posik_engine_spark.oracle import SearchError
 
+# Fixed driver-heap cost of one block-cache entry, in postings of 24 B
+# (the marginal cost of one decoded posting). tracemalloc over
+# decode_postings output: ~0.85 KB per term (its shard dict and five
+# owning arrays) and ~1.2 KB per shard (the ShardPostings and its nine
+# array headers). Without it a cache of df=1 terms cost ~1-2 KB per
+# charged posting under spec.DRIVER_BLOCK_CACHE_MAX_POSTINGS.
+_TERM_CHARGE, _SHARD_CHARGE = 35, 49
+
+
+def _block_charge(shards: dict) -> int:
+    """Budget charge of one cached term ({shard: ShardPostings})."""
+    return _TERM_CHARGE + sum(_SHARD_CHARGE + len(p) for p in shards.values())
+
+
 RESULT_SCHEMA = (
     "doc_id long, repo string, uri string, title string, snippet string, "
     "relevance double, score double"
@@ -112,7 +126,8 @@ class SearchEngine:
     """Index + content store + query-side semantics.
 
     Usable as a context manager; ``close()`` (or exit) restores the
-    session conf and unpersists serving caches.
+    session conf, unpersists serving caches and closes the files the
+    direct readers pinned (the index reader's and the content store's).
     """
 
     def __enter__(self) -> "SearchEngine":
@@ -140,8 +155,10 @@ class SearchEngine:
         # few KB a cold query touches (term blocks, ord resolution,
         # dictionary probes) straight from parquet instead of paying a
         # Spark job's fixed scheduling cost per point read — the round-4
-        # cold-query regression fix. Same snapshot semantics as the
-        # persisted frames; distributed paths are untouched.
+        # cold-query regression fix. It pins the index files at open,
+        # so it keeps serving the snapshot it opened across a later
+        # incremental commit on the same dir; distributed paths are
+        # untouched.
         self._direct = None
         if direct_io:
             from posik_engine_spark.operators import direct_io as D
@@ -201,12 +218,12 @@ class SearchEngine:
         self._dict_complete = False
         # bounded LRU over DECODED posting lists, keyed by term
         # ({shard: wand.ShardPostings}; spec.DRIVER_BLOCK_CACHE_MAX_POSTINGS
-        # budget): a term's blocks are read and decoded once, when the
-        # cache is filled, and hot terms of a Zipfian workload then
-        # serve the driver-WAND path with zero index-scan jobs and no
-        # decode. Same staleness model as the persisted ix frames (an
-        # engine serves one index snapshot, so one avgdl for the
-        # cached block bounds).
+        # budget, charged by _block_charge): a term's blocks are read
+        # and decoded once, when the cache is filled, and hot terms of a
+        # Zipfian workload then serve the driver-WAND path with zero
+        # index-scan jobs and no decode. Same staleness model as the
+        # persisted ix frames (an engine serves one index snapshot, so
+        # one avgdl for the cached block bounds).
         from collections import OrderedDict
 
         self._block_cache: OrderedDict[str, dict] = OrderedDict()
@@ -486,15 +503,16 @@ class SearchEngine:
             "_block_cache_postings",
             spec.DRIVER_BLOCK_CACHE_MAX_POSTINGS,
             terms,
-            lambda shards: sum(len(p) for p in shards.values()),
+            _block_charge,
             fetch,
         )
 
     def close(self) -> None:
         """Release serving state: restore the session conf mutated in
-        __init__ and unpersist the query-optimized caches (index tables
+        __init__, unpersist the query-optimized caches (index tables
         + content store) — engines constructed repeatedly in one session
-        would otherwise accumulate dead cached RDDs."""
+        would otherwise accumulate dead cached RDDs — and close the
+        pinned index and content files."""
         if self._aqe_held:
             self._aqe_held = False
             if self._aqe_finalizer is not None:
@@ -513,6 +531,9 @@ class SearchEngine:
             self._docmeta_cache.clear()
             self._docmeta_cache_rows = 0
             self._stats_memo = None
+        for owner in (self._direct, self._store):
+            if owner is not None:
+                owner.close()
         for df in (
             self.ix.blocks, self.ix.doc_stats, self.ix.term_stats, self._content
         ):

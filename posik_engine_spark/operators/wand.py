@@ -644,7 +644,7 @@ def _wand_shard_results(
     qb = ix.blocks.filter(F.col("term").isin(terms))
     if repos is None:
 
-        def per_shard_solo(key, blocks_pdf: pd.DataFrame) -> pd.DataFrame:
+        def per_shard_solo(key: tuple, blocks_pdf: pd.DataFrame) -> pd.DataFrame:
             out = shard_topk(blocks_pdf, None, terms, idfs, avgdl, k)
             return out.assign(shard=int(key[0]), n_out=len(out))[
                 ["shard", "ord", "score", "n_out"]
@@ -652,7 +652,9 @@ def _wand_shard_results(
 
         return qb.groupBy("shard").applyInPandas(per_shard_solo, _OUT_SCHEMA)
 
-    def per_shard(key, blocks_pdf: pd.DataFrame, stats_pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_shard(
+        key: tuple, blocks_pdf: pd.DataFrame, stats_pdf: pd.DataFrame
+    ) -> pd.DataFrame:
         out = shard_topk(
             blocks_pdf, stats_pdf, terms, idfs, avgdl, k, repos=repos
         )

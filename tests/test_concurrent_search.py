@@ -11,7 +11,7 @@ from __future__ import annotations
 import threading
 
 from posik_engine_spark import corpus, spec
-from posik_engine_spark.operators.search import SearchEngine
+from posik_engine_spark.operators.search import SearchEngine, _block_charge
 
 QUERIES = [
     "merge", "token stream", "index block", "query shard",
@@ -49,9 +49,7 @@ def _run_concurrent(eng, expected, rounds=4, threads_per_query=2):
 
 def _accounting_ok(eng):
     with eng._cache_lock:
-        actual = sum(
-            len(p) for shards in eng._block_cache.values() for p in shards.values()
-        )
+        actual = sum(_block_charge(shards) for shards in eng._block_cache.values())
         return eng._block_cache_postings == actual
 
 
