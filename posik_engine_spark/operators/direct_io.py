@@ -19,9 +19,9 @@ opened ONCE, when the reader is made (the engine's open), and its
 handle, hive partition value and per-row-group (min, max) of the sort
 key are kept. A lookup then
 
-  1. picks files by partition value and row groups by bisecting the
-     key statistics (a row group without usable statistics is always
-     read);
+  1. picks files by partition value and row groups whose key range
+     can hold a lookup key (a row group without usable statistics is
+     always read);
   2. reads only the KEY column of those row groups and masks it with
      the lookup keys — a file with no match is done;
   3. reads the requested columns of just the row groups where a key
@@ -50,7 +50,6 @@ a cluster round trip (its LemmaRepository.java:27). Remote URIs
 
 from __future__ import annotations
 
-import bisect
 import json
 import os
 import threading
@@ -80,43 +79,35 @@ class _PinnedFile:
 
     def __init__(self, path: str, part: int, key: str):
         self.pf = pq.ParquetFile(path)
-        self.part = part
-        # Arrow does not promise that one ParquetFile reads safely from
-        # several threads at once: reads of one file are serialized
-        self.lock = threading.Lock()
-        md = self.pf.metadata
-        col = md.schema.names.index(key)
-        self.n_rows = [md.row_group(g).num_rows for g in range(md.num_row_groups)]
-        self.always: list[int] = []  # row groups without usable stats
-        self.groups: list[int] = []
-        self.lo: list = []
-        self.hi: list = []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(col).statistics
-            if st is None or not st.has_min_max:
-                self.always.append(g)
-            else:
-                self.groups.append(g)
-                self.lo.append(st.min)
-                self.hi.append(st.max)
-        # a key-sorted file has non-decreasing mins and maxes, so each
-        # key's row groups are one bisected run; otherwise check all
-        self.sorted = self.lo == sorted(self.lo) and self.hi == sorted(self.hi)
+        try:
+            self.part = part
+            # Arrow does not promise that one ParquetFile reads safely
+            # from several threads at once: reads of one file are
+            # serialized
+            self.lock = threading.Lock()
+            md = self.pf.metadata
+            col = md.schema.names.index(key)
+            self.n_rows: list[int] = []
+            # (min, max) of the key per row group; None where the
+            # writer kept no statistics (always read)
+            self.ranges: list[tuple | None] = []
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                st = rg.column(col).statistics
+                self.n_rows.append(rg.num_rows)
+                self.ranges.append(
+                    (st.min, st.max) if st is not None and st.has_min_max else None
+                )
+        except BaseException:
+            self.pf.close()
+            raise
 
     def row_groups(self, keys: list) -> list[int]:
         """Row groups whose key range can hold one of ``keys``."""
-        out = set(self.always)
-        if self.sorted:
-            for k in keys:
-                i = bisect.bisect_left(self.hi, k)  # first group with max >= k
-                while i < len(self.groups) and self.lo[i] <= k:
-                    out.add(self.groups[i])
-                    i += 1
-        else:
-            for g, lo, hi in zip(self.groups, self.lo, self.hi):
-                if any(lo <= k <= hi for k in keys):
-                    out.add(g)
-        return sorted(out)
+        return [
+            g for g, r in enumerate(self.ranges)
+            if r is None or any(r[0] <= k <= r[1] for k in keys)
+        ]
 
     def matched(self, groups: list[int], hit: np.ndarray) -> tuple[list[int], np.ndarray]:
         """The ``groups`` holding a hit of ``hit`` (a mask over their

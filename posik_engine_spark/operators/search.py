@@ -170,8 +170,12 @@ class SearchEngine:
         # become partition+row-group-pruned point lookups instead of a
         # scan over the persisted corpus (operators/content_store.py) —
         # the 100 TB serving path. None keeps the in-memory persisted
-        # ``docs`` scan (right for small/ephemeral corpora).
+        # ``docs`` scan (right for small/ephemeral corpora). A store the
+        # caller passes in stays the caller's to close (it may be shared
+        # by several engines); one from_index_dir opened is closed by
+        # close().
         self._store = content_store
+        self._owns_store = False
         self._aqe_held = False
         self._aqe_finalizer: weakref.finalize | None = None
         if optimize_for_queries:
@@ -345,10 +349,12 @@ class SearchEngine:
             from posik_engine_spark.operators.content_store import ContentStore
 
             store = ContentStore(spark, content_dir, direct=direct_io)
-        return cls(
+        engine = cls(
             spark, load_index(spark, index_dir), docs,
             index_dir=index_dir, content_store=store, direct_io=direct_io,
         )
+        engine._owns_store = store is not None
+        return engine
 
     # ---------------------------------------------------------- Q2/Q3
     def filter_query_terms(self, raw_terms: list[str]) -> list[str]:
@@ -512,7 +518,8 @@ class SearchEngine:
         __init__, unpersist the query-optimized caches (index tables
         + content store) — engines constructed repeatedly in one session
         would otherwise accumulate dead cached RDDs — and close the
-        pinned index and content files."""
+        pinned index files and, if this engine opened it, the content
+        store's."""
         if self._aqe_held:
             self._aqe_held = False
             if self._aqe_finalizer is not None:
@@ -531,9 +538,10 @@ class SearchEngine:
             self._docmeta_cache.clear()
             self._docmeta_cache_rows = 0
             self._stats_memo = None
-        for owner in (self._direct, self._store):
-            if owner is not None:
-                owner.close()
+        if self._direct is not None:
+            self._direct.close()
+        if self._owns_store:
+            self._store.close()
         for df in (
             self.ix.blocks, self.ix.doc_stats, self.ix.term_stats, self._content
         ):

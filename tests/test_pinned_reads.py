@@ -6,7 +6,9 @@
   groups and files written without statistics;
 - a cold lookup of a one-shard term reads non-key columns from that
   one file only, and a warm repeat query opens and reads no file;
-- ``SearchEngine.close()`` releases every pinned file descriptor;
+- ``SearchEngine.close()`` releases every pinned file descriptor but
+  leaves a content store the caller passed in open, and a failed pin
+  leaves no file open;
 - an engine opened before an ``incremental_update`` on its dir keeps
   serving the snapshot it opened (it used to raise FileNotFoundError);
 - the block cache charges each entry its fixed overhead, so df=1 terms
@@ -184,7 +186,7 @@ def test_random_lookups_match_spark_frames(spark, reshaped):
     try:
         # the shapes the fixture promises are really there
         assert len(rd._blocks.files[0]) == 2
-        assert any(len(f.always) for f in rd._blocks.files[1])
+        assert any(None in f.ranges for f in rd._blocks.files[1])
         assert any(len(f.n_rows) > 1 for f in rd._blocks.files[0])
 
         ix = I.load_index(spark, ix_dir)
@@ -307,6 +309,42 @@ def test_close_releases_pinned_files(spark, state):
     assert _open_fds() == before
     with pytest.raises(ValueError, match="closed"):
         eng._direct.blocks_for_terms(["common1"])
+
+
+def test_close_leaves_a_passed_store_open(spark, state):
+    """A store the caller passes in may serve several engines: closing
+    one engine must not close it."""
+    store = ContentStore(spark, state["cs"])
+    try:
+        engines = [
+            SearchEngine(
+                spark, I.load_index(spark, state["ix"]), None,
+                index_dir=state["ix"], content_store=store,
+            )
+            for _ in range(2)
+        ]
+        engines[0].close()
+        resp = engines[1].search("rare3 common1", limit=10)
+        assert resp.count > 0 and all(h[4] for h in resp.hits)  # snippets
+        engines[1].close()
+        store.fetch([0])  # raises if the store was closed
+    finally:
+        store.close()
+
+
+@pytest.mark.skipif(not os.path.isdir("/proc/self/fd"), reason="needs /proc")
+def test_failed_pin_leaves_no_open_file(state):
+    """A file whose footer lacks the key column fails the pin, and the
+    files opened up to then (the failing one included) are closed."""
+    path = os.path.join(state["ix"], "blocks")
+    D.PinnedTable(path, "shard", "term").close()
+    before = _open_fds()
+    with pytest.raises(ValueError) as failed:
+        D.PinnedTable(path, "shard", "no_such_column")
+    # the kept traceback holds the half-built file object: no garbage
+    # collection may close its file, the failed pin itself must
+    assert len(os.listdir("/proc/self/fd")) == before
+    del failed
 
 
 # ------------------------------------------------- cache accounting
