@@ -25,6 +25,8 @@ import os
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from posik_engine_spark.operators.direct_io import PinnedTable
+
 DEFAULT_CONTENT_BUCKETS = 64
 
 
@@ -61,32 +63,26 @@ def save_content_store(
 class ContentStore:
     """Point-lookup handle over a save_content_store dir.
 
-    ``fetch`` serves driver-direct from the parquet files (pyarrow over
-    files pinned at construction: bucket pruning + doc_id row-group
-    pruning, sub-millisecond) when the dir is local, falling back to
-    the pruned Spark plan otherwise; ``direct=False`` forces the Spark
-    path (equivalence is test-pinned). ``close()`` releases the pinned
-    files. ``lookup_plan`` stays the distributed access path for
-    callers composing it into bigger plans."""
+    The bucket files are pinned at construction
+    (``direct_io.PinnedTable``): ``fetch`` and ``repos_for_ids`` serve
+    driver-direct from them (bucket pruning + doc_id row-group pruning,
+    sub-millisecond) and ``close()`` releases them. ``lookup_plan`` is
+    the distributed access path for callers composing it into bigger
+    plans, and ``_df`` the whole store as a Spark frame."""
 
-    def __init__(self, spark: SparkSession, path: str, direct: bool = True):
+    def __init__(self, spark: SparkSession, path: str):
         with open(os.path.join(path, "_content_store.json")) as f:
             self.n_buckets = int(json.load(f)["n_buckets"])
         self.path = path
         self._df = spark.read.parquet(path)
-        self._direct = None
-        if direct and os.path.isdir(path):
-            from posik_engine_spark.operators.direct_io import (
-                DirectContentReader,
-            )
-
-            self._direct = DirectContentReader(path, self.n_buckets)
+        self._cols = ["doc_id", "repo", "path", "content"] + (
+            ["title"] if "title" in self._df.columns else []
+        )
+        self._table = PinnedTable(path, "bucket", "doc_id")
 
     def close(self) -> None:
-        """Release the direct reader's pinned files (the Spark path
-        holds none)."""
-        if self._direct is not None:
-            self._direct.close()
+        """Release the pinned bucket files."""
+        self._table.close()
 
     def lookup_plan(self, ids: list[int]) -> DataFrame:
         """The pruned-scan plan for a batch of doc_ids: bucket IN (...)
@@ -94,19 +90,24 @@ class ContentStore:
         sorted min/max stats."""
         # python % matches Spark pmod for positive modulus (nonnegative)
         buckets = sorted({i % self.n_buckets for i in ids})
-        cols = ["doc_id", "repo", "path", "content"] + (
-            ["title"] if "title" in self._df.columns else []
-        )
         return self._df.filter(
             F.col("bucket").isin(buckets) & F.col("doc_id").isin(list(ids))
-        ).select(*cols)
+        ).select(*self._cols)
+
+    def _rows(self, ids: list[int], columns: list[str]) -> list[dict]:
+        by_bucket: dict[int, set[int]] = {}
+        for i in ids:
+            by_bucket.setdefault(int(i) % self.n_buckets, set()).add(int(i))
+        return self._table.lookup(
+            {b: list(v) for b, v in by_bucket.items()}, columns
+        )
 
     def fetch(self, ids: list[int]) -> dict[int, Row]:
+        """doc_id -> Row(doc_id, repo, path, content[, title]); ids
+        absent from the store are not returned."""
         if not ids:
             return {}
-        if self._direct is not None:
-            return self._direct.fetch(ids)
-        return {r["doc_id"]: r for r in self.lookup_plan(ids).collect()}
+        return {int(r["doc_id"]): Row(**r) for r in self._rows(ids, self._cols)}
 
     def repos_for_ids(self, ids: list[int]) -> dict[int, str]:
         """doc_id -> repo for a bounded id batch — the same pruned point
@@ -115,14 +116,7 @@ class ContentStore:
         retrieval) where fetching document text would waste the read."""
         if not ids:
             return {}
-        if self._direct is not None:
-            return self._direct.repos_for_ids(ids)
-        buckets = sorted({i % self.n_buckets for i in ids})
-        rows = (
-            self._df.filter(
-                F.col("bucket").isin(buckets) & F.col("doc_id").isin(list(ids))
-            )
-            .select("doc_id", "repo")
-            .collect()
-        )
-        return {int(r["doc_id"]): r["repo"] for r in rows}
+        return {
+            int(r["doc_id"]): r["repo"]
+            for r in self._rows(ids, ["doc_id", "repo"])
+        }

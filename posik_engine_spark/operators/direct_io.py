@@ -1,13 +1,14 @@
-"""Driver-direct point lookups over on-disk index tables (serving path).
+"""Driver-direct point lookups over on-disk index tables (the serving
+read path).
 
 A top-k serving lookup is a POINT READ, and a serving coordinator reads
 index files directly — the Lucene model, where the searcher process
 opens segment files itself. Routing the same reads through a one-off
 Spark job costs ~0.1-0.3 s of fixed scheduling per read (measured on
 the bench protocol: the ord -> doc_id job alone was a median 0.29 s of
-a 0.52 s cold query, for a dozen rows). For file-backed indexes
-(save_index / IndexBuilder dirs) this module serves the four cold-query
-point reads from the very parquet files Spark wrote:
+a 0.52 s cold query, for a dozen rows). Every SearchEngine serves the
+four cold-query point reads from the parquet files Spark wrote (an
+index built in memory is first saved to a temp dir the engine owns):
 
   - posting blocks for query terms   (blocks/,     shard=, term-sorted)
   - ord -> doc_id resolution         (doc_stats/,  shard=, ord-sorted)
@@ -40,12 +41,14 @@ handle keeps reading the unlinked file, so an engine opened before the
 commit keeps answering from the snapshot it opened (a new engine sees
 the new one). ``close()`` releases the handles.
 
-The DISTRIBUTED paths are unchanged — fat queries (posting volume over
-the driver gate), scoped queries and every analytical operator still
-run through Spark; this is only the interactive serving fast path,
-where the reference serves queries from its PostgreSQL B-trees without
-a cluster round trip (its LemmaRepository.java:27). Remote URIs
-(S3/HDFS) fall back to the Spark path.
+Files are opened with the builtin filesystem, like ``load_index`` and
+``ContentStore`` read their JSON: a multi-host deployment serves a
+shared (e.g. NFS-mounted) index dir. The DISTRIBUTED paths are
+unchanged — fat queries (posting volume over the driver gate), scoped
+queries and every analytical operator still run through Spark; this is
+only the interactive serving path, where the reference serves queries
+from its PostgreSQL B-trees without a cluster round trip (its
+LemmaRepository.java:27).
 """
 
 from __future__ import annotations
@@ -62,15 +65,6 @@ import pyarrow.parquet as pq
 from posik_engine_spark import spec
 
 _TABLES = ("blocks", "doc_stats", "term_stats")
-
-
-def available(index_dir: str | None) -> bool:
-    """True iff ``index_dir`` looks like a local on-disk index this
-    module can serve (every table dir present). Remote URIs fall back
-    to the Spark path — wiring fsspec filesystems is deployment glue."""
-    return index_dir is not None and all(
-        os.path.isdir(os.path.join(index_dir, t)) for t in _TABLES
-    )
 
 
 class _PinnedFile:
@@ -214,7 +208,9 @@ class DirectIndexReader:
     releases the pinned files."""
 
     def __init__(self, index_dir: str):
-        if not available(index_dir):
+        if index_dir is None or not all(
+            os.path.isdir(os.path.join(index_dir, t)) for t in _TABLES
+        ):
             raise ValueError(
                 f"DirectIndexReader({index_dir!r}): not a local index dir "
                 f"(need {', '.join(_TABLES)} subdirs)"
@@ -284,53 +280,8 @@ class DirectIndexReader:
 
 def term_bucket(term: str, n_buckets: int = spec.TERM_STATS_BUCKETS) -> int:
     """Dictionary hash-bucket of a term — MUST match the Spark-side
-    expression in operators/index._with_term_bucket (crc32 is the same
+    expression in operators/index.with_term_bucket (crc32 is the same
     standard CRC-32 in zlib and Spark's F.crc32)."""
     import zlib
 
     return zlib.crc32(term.encode("utf-8")) % n_buckets
-
-
-class DirectContentReader:
-    """Point-lookup handle over a save_content_store dir (the pyarrow
-    twin of ContentStore.fetch): pins the bucket files at construction
-    and reads the doc_id-sorted files of the ids' buckets. Returns
-    pyspark Rows so the snippet assembly consumes either source
-    identically."""
-
-    def __init__(self, store_path: str, n_buckets: int):
-        self.path = store_path
-        self.n_buckets = n_buckets
-        self._table = PinnedTable(store_path, "bucket", "doc_id")
-
-    def close(self) -> None:
-        self._table.close()
-
-    def _rows(self, ids: list[int], columns: list[str]) -> list[dict]:
-        by_bucket: dict[int, set[int]] = {}
-        for i in ids:
-            by_bucket.setdefault(int(i) % self.n_buckets, set()).add(int(i))
-        return self._table.lookup(
-            {b: list(v) for b, v in by_bucket.items()}, columns
-        )
-
-    def fetch(self, ids: list[int]) -> dict[int, object]:
-        from pyspark.sql import Row
-
-        if not ids:
-            return {}
-        cols = ["doc_id", "repo", "path", "content"] + (
-            ["title"] if "title" in self._table.columns else []
-        )
-        return {int(r["doc_id"]): Row(**r) for r in self._rows(ids, cols)}
-
-    def repos_for_ids(self, ids: list[int]) -> dict[int, str]:
-        """doc_id -> repo, the same point read as ``fetch`` but reading
-        only the two slim columns (scope checks must not pay for content
-        bytes)."""
-        if not ids:
-            return {}
-        return {
-            int(r["doc_id"]): r["repo"]
-            for r in self._rows(ids, ["doc_id", "repo"])
-        }

@@ -241,10 +241,12 @@ class Index:
     # shares one MorphologyService across indexing and search)
     stemmer: str | None = None
     # local on-disk dir backing the tables (save_index / IndexBuilder
-    # layout) when known: SearchEngine serves its cold-query point
-    # lookups driver-direct from these files (operators/direct_io.py)
-    # instead of paying a Spark job's fixed cost per point read; None
-    # for in-memory indexes and non-parquet backends.
+    # layout): SearchEngine serves its cold-query point lookups
+    # driver-direct from these files (operators/direct_io.py) instead
+    # of paying a Spark job's fixed cost per point read. None for an
+    # index built in memory (build_index) or read from a non-parquet
+    # backend; SearchEngine saves such an index to a temp dir it owns
+    # and serves that copy.
     path: str | None = None
     # hash-bucket count of the on-disk term dictionary (meta.json
     # ``term_stats_buckets``); None for in-memory dictionaries.
@@ -329,37 +331,46 @@ def build_index(
 
 
 def save_index(ix: Index, path: str) -> None:
-    (
-        ix.blocks.repartition("shard")
-        .sortWithinPartitions("term", "block_id")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(os.path.join(path, "blocks"))
-    )
-    (
-        # ord-sorted files (== (repo, path, doc_id) order by
-        # construction): repo-scoped probes and incremental stale
-        # lookups push ``repo IN (...)`` down to row-group pruning, and
-        # the top-k ord -> doc_id resolution probes prune on ord min/max
-        ix.doc_stats.repartition("shard")
-        .sortWithinPartitions("ord")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(os.path.join(path, "doc_stats"))
-    )
-    # hash-bucketed, term-sorted dictionary: per-query term probes
-    # prune to bucket + row group (the reference's secondary b-tree on
-    # lemma, model/Lemma.java:17), and the write parallelizes across
-    # buckets instead of funnelling the vocabulary through one task
     n_tb = spec.TERM_STATS_BUCKETS
-    (
-        with_term_bucket(ix.term_stats.select("term", "df", "ctf"), n_tb)
-        .repartition(n_tb, "tbucket")
-        .sortWithinPartitions("tbucket", "term")
-        .write.mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(os.path.join(path, "term_stats"))
+    tables = (
+        (
+            "blocks",
+            "shard",
+            ix.blocks.repartition("shard").sortWithinPartitions("term", "block_id"),
+        ),
+        (
+            # ord-sorted files (== (repo, path, doc_id) order by
+            # construction): repo-scoped probes and incremental stale
+            # lookups push ``repo IN (...)`` down to row-group pruning,
+            # and the top-k ord -> doc_id resolution probes prune on ord
+            # min/max
+            "doc_stats",
+            "shard",
+            ix.doc_stats.repartition("shard").sortWithinPartitions("ord"),
+        ),
+        (
+            # hash-bucketed, term-sorted dictionary: per-query term
+            # probes prune to bucket + row group (the reference's
+            # secondary b-tree on lemma, model/Lemma.java:17), and the
+            # write parallelizes across buckets instead of funnelling
+            # the vocabulary through one task
+            "term_stats",
+            "tbucket",
+            with_term_bucket(ix.term_stats.select("term", "df", "ctf"), n_tb)
+            .repartition(n_tb, "tbucket")
+            .sortWithinPartitions("tbucket", "term"),
+        ),
     )
+    for name, part, df in tables:
+        out = os.path.join(path, name)
+        df.write.mode("overwrite").partitionBy(part).parquet(out)
+        # a partitioned write of an empty table leaves no data file, and
+        # a dir without one cannot be read back (no schema to infer):
+        # give it one empty, schema-only file in partition 0
+        if not any(f.endswith(".parquet") for _, _, fs in os.walk(out) for f in fs):
+            df.drop(part).write.mode("overwrite").parquet(
+                os.path.join(out, f"{part}=0")
+            )
     with open(os.path.join(path, "meta.json"), "w") as f:
         json.dump(
             {

@@ -698,8 +698,8 @@ class IndexBuilder:
             meta=B.CorpusMeta(m["n_docs"], m["sum_len_path"], m["sum_len_content"]),
             stemmer=m.get("stemmer", self.stemmer),
             # plain-parquet dirs serve driver-direct point lookups
-            # (operators/direct_io.py); other backends read through
-            # their own engine
+            # (operators/direct_io.py) from their own files; a
+            # SearchEngine serves other backends from a saved copy
             path=(
                 self.out_dir
                 if type(self.backend) is ParquetBackend

@@ -10,6 +10,8 @@ SearchService.java:101-114) until hit or empty.
 
 from __future__ import annotations
 
+import shutil
+import tempfile
 import time
 import weakref
 from dataclasses import dataclass
@@ -20,7 +22,13 @@ from pyspark.sql import functions as F
 from posik_engine_spark import spec
 from posik_engine_spark.functions.snippet import build_snippet, title_for_path
 from posik_engine_spark.functions.tokenizer import tokenize_py
-from posik_engine_spark.operators.index import Index, build_index
+from posik_engine_spark.operators.direct_io import DirectIndexReader
+from posik_engine_spark.operators.index import (
+    Index,
+    build_index,
+    load_index,
+    save_index,
+)
 from posik_engine_spark.operators.wand import (
     decode_postings,
     wand_topk,
@@ -125,9 +133,13 @@ def _aqe_release(spark: SparkSession) -> None:
 class SearchEngine:
     """Index + content store + query-side semantics.
 
-    Usable as a context manager; ``close()`` (or exit) restores the
-    session conf, unpersists serving caches and closes the files the
-    direct readers pinned (the index reader's and the content store's).
+    Every engine serves its point reads from pinned index files
+    (operators/direct_io.py): an ``Index`` without a ``path`` (built in
+    memory) is first saved to a temp dir the engine owns and served
+    from there. Usable as a context manager; ``close()`` (or exit)
+    restores the session conf, unpersists serving caches, closes the
+    pinned files (the index reader's and, if the engine opened it, the
+    content store's) and removes the owned temp dir.
     """
 
     def __enter__(self) -> "SearchEngine":
@@ -144,28 +156,31 @@ class SearchEngine:
         optimize_for_queries: bool = True,
         index_dir: str | None = None,
         content_store=None,
-        direct_io: bool = True,
     ):
         self.spark = spark
         # builder dir backing this engine (if any): statistics() consults
         # its markers/lineage for the live isIndexing flag (A3)
         self._index_dir = index_dir
-        # driver-direct point-lookup reader over the on-disk index files
+        # an index built in memory has no files to pin: write it to a
+        # temp dir this engine owns (removed by close(), or by the
+        # finalizer for an engine dropped without close()) and serve
+        # the copy loaded from there
+        path = index_dir or ix.path
+        self._dir_cleanup: weakref.finalize | None = None
+        if path is None:
+            path = tempfile.mkdtemp(prefix="posik-engine-")
+            self._dir_cleanup = weakref.finalize(self, shutil.rmtree, path, True)
+            save_index(ix, path)
+            ix = load_index(spark, path)
+        # driver-direct point-lookup reader over the index files
         # (operators/direct_io.py): the serving coordinator reads the
         # few KB a cold query touches (term blocks, ord resolution,
         # dictionary probes) straight from parquet instead of paying a
-        # Spark job's fixed scheduling cost per point read — the round-4
-        # cold-query regression fix. It pins the index files at open,
-        # so it keeps serving the snapshot it opened across a later
-        # incremental commit on the same dir; distributed paths are
-        # untouched.
-        self._direct = None
-        if direct_io:
-            from posik_engine_spark.operators import direct_io as D
-
-            p = index_dir or getattr(ix, "path", None)
-            if D.available(p):
-                self._direct = D.DirectIndexReader(p)
+        # Spark job's fixed scheduling cost per point read. It pins the
+        # files at open, so it keeps serving the snapshot it opened
+        # across a later incremental commit on the same dir;
+        # distributed paths are untouched.
+        self._direct = DirectIndexReader(path)
         # optional bucketed+sorted on-disk store: top-k content fetches
         # become partition+row-group-pruned point lookups instead of a
         # scan over the persisted corpus (operators/content_store.py) —
@@ -290,20 +305,16 @@ class SearchEngine:
                 # concurrent writer's identical value. The result is
                 # assembled from the LOCAL snapshot + fetch, so a
                 # concurrent clear() between phases cannot drop a real
-                # dictionary term from this query's scoring. Direct
-                # readers probe the bucketed dictionary files in
-                # milliseconds; otherwise one pruned Spark scan.
-                if self._direct is not None:
-                    fetched = {
-                        r["term"]: (
-                            self.ix.meta.idf(int(r["df"])),
-                            int(r["df"]),
-                            int(r["ctf"]),
-                        )
-                        for r in self._direct.term_info_rows(missing)
-                    }
-                else:
-                    fetched = self.ix.term_info(missing)
+                # dictionary term from this query's scoring. The probe
+                # reads the pinned bucketed dictionary files.
+                fetched = {
+                    r["term"]: (
+                        self.ix.meta.idf(int(r["df"])),
+                        int(r["df"]),
+                        int(r["ctf"]),
+                    )
+                    for r in self._direct.term_info_rows(missing)
+                }
                 with self._cache_lock:
                     for t in missing:
                         self._term_cache.setdefault(t, fetched.get(t))
@@ -323,7 +334,12 @@ class SearchEngine:
         n_shards: int = spec.DEFAULT_N_SHARDS,
         stemmer: str | None = None,
     ) -> "SearchEngine":
-        return cls(spark, build_index(docs, n_shards=n_shards, stemmer=stemmer), docs)
+        ix = build_index(docs, n_shards=n_shards, stemmer=stemmer)
+        engine = cls(spark, ix, docs)
+        # the engine serves the copy it saved: release the build's caches
+        for df in (ix.blocks, ix.doc_stats, ix.term_stats):
+            df.unpersist()
+        return engine
 
     @classmethod
     def from_index_dir(
@@ -332,7 +348,6 @@ class SearchEngine:
         index_dir: str,
         docs: DataFrame | None = None,
         content_dir: str | None = None,
-        direct_io: bool = True,
     ) -> "SearchEngine":
         """Serve from an on-disk index (IndexBuilder output or
         save_index dir). Snippet content comes from ``content_dir`` (a
@@ -340,6 +355,8 @@ class SearchEngine:
         or from ``docs`` (persisted corpus scan); pass at most one.
         With neither, the engine serves statistics and raises a clear
         error if a search needs snippet content."""
+        # looked up on the module per call, so a wrapper installed on
+        # index.load_index (tracing) times this open
         from posik_engine_spark.operators.index import load_index
 
         if docs is not None and content_dir is not None:
@@ -348,10 +365,10 @@ class SearchEngine:
         if content_dir is not None:
             from posik_engine_spark.operators.content_store import ContentStore
 
-            store = ContentStore(spark, content_dir, direct=direct_io)
+            store = ContentStore(spark, content_dir)
         engine = cls(
             spark, load_index(spark, index_dir), docs,
-            index_dir=index_dir, content_store=store, direct_io=direct_io,
+            index_dir=index_dir, content_store=store,
         )
         engine._owns_store = store is not None
         return engine
@@ -415,21 +432,14 @@ class SearchEngine:
         """(shard, ord) -> doc_id for the WAND survivors through a
         row-count-bounded LRU (``_cached_fetch``): misses run ONE
         pruned doc_stats point lookup (shard partition + ord row-group
-        pruning) — driver-direct from the parquet files when the index
-        is file-backed, else a Spark job; hits cost nothing."""
-        from posik_engine_spark.operators.wand import _resolve_ords_spark
-
-        if self._direct is not None:
-            fetch = self._direct.resolve_ords
-        else:
-            fetch = lambda missing: _resolve_ords_spark(self.ix, missing)  # noqa: E731
+        pruning) read from the pinned files; hits cost nothing."""
         return self._cached_fetch(
             self._docmeta_cache,
             "_docmeta_cache_rows",
             spec.DRIVER_DOCMETA_CACHE_MAX_ROWS,
             keys,
             lambda _v: 1,
-            fetch,
+            self._direct.resolve_ords,
         )
 
     def _cached_fetch(
@@ -487,20 +497,14 @@ class SearchEngine:
     def _postings_for_terms(self, terms: list[str]) -> dict[str, dict]:
         """Decoded posting lists ({shard: ShardPostings}) for the query
         terms through the bounded per-term LRU (``_cached_fetch``):
-        misses run ONE pruned read for all missing terms (driver-direct
-        from the block files when the index is file-backed, else a
-        Spark scan) and ONE decode; hits cost nothing. Terms absent
+        misses run ONE pruned read of the pinned block files for all
+        missing terms and ONE decode; hits cost nothing. Terms absent
         from the index cache as empty dicts so they are never
         re-scanned. A corrupt block raises from the decode, before
         anything is inserted or charged to the budget."""
 
         def fetch(missing: list[str]) -> dict[str, dict]:
-            if self._direct is not None:
-                rows = self._direct.blocks_for_terms(missing)
-            else:
-                rows = self.ix.blocks.filter(
-                    F.col("term").isin(missing)
-                ).collect()
+            rows = self._direct.blocks_for_terms(missing)
             decoded = decode_postings(rows, self.ix.meta.avgdl)
             return {t: decoded.get(t, {}) for t in missing}
 
@@ -517,9 +521,9 @@ class SearchEngine:
         """Release serving state: restore the session conf mutated in
         __init__, unpersist the query-optimized caches (index tables
         + content store) — engines constructed repeatedly in one session
-        would otherwise accumulate dead cached RDDs — and close the
-        pinned index files and, if this engine opened it, the content
-        store's."""
+        would otherwise accumulate dead cached RDDs — close the pinned
+        index files and, if this engine opened it, the content store's,
+        and remove the temp dir an in-memory index was saved to."""
         if self._aqe_held:
             self._aqe_held = False
             if self._aqe_finalizer is not None:
@@ -538,8 +542,7 @@ class SearchEngine:
             self._docmeta_cache.clear()
             self._docmeta_cache_rows = 0
             self._stats_memo = None
-        if self._direct is not None:
-            self._direct.close()
+        self._direct.close()
         if self._owns_store:
             self._store.close()
         for df in (
@@ -551,6 +554,8 @@ class SearchEngine:
                 df.unpersist()
             except Exception:
                 pass
+        if self._dir_cleanup is not None:
+            self._dir_cleanup()
 
     def search(
         self,

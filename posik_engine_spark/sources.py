@@ -38,7 +38,7 @@ _TABLE_ID_RE = re.compile(
 )
 
 
-def _iceberg_available(spark: SparkSession) -> bool:
+def _has_iceberg(spark: SparkSession) -> bool:
     try:
         spark._jvm.java.lang.Class.forName(  # noqa: SLF001 (classpath probe)
             "org.apache.iceberg.spark.source.IcebergSource"
@@ -57,7 +57,7 @@ def read_docs(spark: SparkSession, source: str) -> DataFrame:
         (".parquet", ".pq", ".orc", ".json", ".csv")
     )
     if not os.path.exists(source) and not looks_like_file and _TABLE_ID_RE.match(source):
-        if _iceberg_available(spark):
+        if _has_iceberg(spark):
             df = spark.read.format("iceberg").load(source)
         else:
             df = spark.table(source)

@@ -3,11 +3,12 @@ verdict item 1), the hash-bucketed term dictionary (item 4), and the
 round-4 advisor hardening of the WAND tie handling:
 
 - every direct pyarrow point read returns exactly what its pruned
-  Spark plan returns (blocks, ord resolution, dictionary probes,
-  content fetch);
-- a COLD query on a file-backed engine serves end-to-end without
-  touching ANY Spark index/content frame (the poison test — the whole
-  point of the direct path is removing per-query Spark jobs);
+  Spark reference returns (``ix.blocks.filter``, ``_resolve_ords_spark``,
+  ``Index.term_info``, ``ContentStore.lookup_plan`` and its ``_df``);
+- a COLD query serves end-to-end without touching ANY Spark
+  index/content frame (the poison test — the whole point of the direct
+  path is removing per-query Spark jobs), on a file-backed engine and
+  on an in-memory one (served from the copy it saved);
 - the dictionary probe partition-prunes to the queried terms' buckets
   and the driver-side bucket function agrees with the Spark-side one;
 - the keep-ties survivor set is capped (duplicate-heavy corpora must
@@ -23,7 +24,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from posik_engine_spark import corpus, spec
+from posik_engine_spark import corpus, oracle, spec
+from posik_engine_spark.functions.stemmer import resolve as resolve_stemmer
+from posik_engine_spark.functions.tokenizer import tokenize_py
 from posik_engine_spark.operators import index as I
 from posik_engine_spark.operators import wand as W
 from posik_engine_spark.operators.content_store import (
@@ -32,7 +35,6 @@ from posik_engine_spark.operators.content_store import (
 )
 from posik_engine_spark.operators.direct_io import (
     DirectIndexReader,
-    available,
     term_bucket,
 )
 from posik_engine_spark.operators.search import SearchEngine
@@ -62,10 +64,11 @@ def contentdir(spark, docs, tmp_path_factory):
 # --------------------------------------------------- direct == Spark
 
 
-def test_available_detects_index_dirs(ixdir, tmp_path):
-    assert available(ixdir)
-    assert not available(str(tmp_path))
-    assert not available(None)
+def test_reader_rejects_non_index_dir(ixdir, tmp_path):
+    DirectIndexReader(ixdir).close()
+    for bad in (str(tmp_path), None):
+        with pytest.raises(ValueError, match="not a local index dir"):
+            DirectIndexReader(bad)
 
 
 def test_blocks_direct_match_spark(spark, ixdir):
@@ -122,15 +125,32 @@ def test_term_info_direct_matches_spark(spark, ixdir):
     assert got == want and set(got) == set(vocab)
 
 
+def _plan_fetch(store, ids) -> dict:
+    """The Spark reference of ``ContentStore.fetch``."""
+    return {r["doc_id"]: r for r in store.lookup_plan(ids).collect()}
+
+
+def _plan_repos(store, ids) -> dict:
+    """The Spark reference of ``ContentStore.repos_for_ids``."""
+    rows = (
+        store._df.filter(F.col("doc_id").isin(list(ids)))
+        .select("doc_id", "repo")
+        .collect()
+    )
+    return {int(r["doc_id"]): r["repo"] for r in rows}
+
+
 def test_content_store_direct_matches_spark(spark, contentdir):
-    direct = ContentStore(spark, contentdir)
-    via_spark = ContentStore(spark, contentdir, direct=False)
-    assert direct._direct is not None and via_spark._direct is None
-    ids = [r["doc_id"] for r in direct._df.select("doc_id").limit(9).collect()]
-    a, b = direct.fetch(ids), via_spark.fetch(ids)
-    assert set(a) == set(b) == set(ids)
-    for i in ids:
-        assert a[i].asDict() == b[i].asDict()
+    store = ContentStore(spark, contentdir)
+    try:
+        assert store._table.files  # the bucket files are pinned
+        ids = [r["doc_id"] for r in store._df.select("doc_id").limit(9).collect()]
+        a, b = store.fetch(ids), _plan_fetch(store, ids)
+        assert set(a) == set(b) == set(ids)
+        for i in ids:
+            assert a[i].asDict() == b[i].asDict()
+    finally:
+        store.close()
 
 
 # ------------------------------------------------- bucketed dictionary
@@ -187,20 +207,46 @@ class _Boom:
         raise AssertionError(f"direct-path query touched a Spark frame (.{name})")
 
 
+class _SparkReads:
+    """The Spark references of the three index point reads, in
+    ``DirectIndexReader``'s shape: an engine given this instead of its
+    reader serves every cold read through Spark."""
+
+    def __init__(self, ix):
+        self.ix = ix
+
+    def blocks_for_terms(self, terms):
+        return self.ix.blocks.filter(F.col("term").isin(terms)).collect()
+
+    def resolve_ords(self, keys):
+        return W._resolve_ords_spark(self.ix, keys)
+
+    def term_info_rows(self, terms):
+        return [
+            {"term": t, "df": df, "ctf": ctf}
+            for t, (_idf, df, ctf) in self.ix.term_info(terms).items()
+        ]
+
+    def close(self):
+        pass
+
+
 def test_cold_query_runs_no_spark_frame_access(spark, docs, ixdir, contentdir, monkeypatch):
     """File-backed engine + direct IO: a COLD query (nothing cached)
     serves entirely from the driver-direct pyarrow reads — poison every
     Spark frame the old path touched and search must still work,
-    returning exactly what a Spark-path engine returns."""
+    returning exactly what an engine reading through Spark returns."""
     # force the big-vocab path so the dictionary probe itself is cold
     monkeypatch.setattr(spec, "DRIVER_DICT_MAX_TERMS", 0)
     ref = SearchEngine.from_index_dir(
         spark, ixdir, content_dir=contentdir
     )
-    ref._direct = None  # Spark path end-to-end
-    ref._store._direct = None
+    ref._direct.close()
+    ref._direct = _SparkReads(ref.ix)  # Spark reads end-to-end
+    ref._store.fetch = lambda ids: _plan_fetch(ref._store, ids)
     eng = SearchEngine.from_index_dir(spark, ixdir, content_dir=contentdir)
-    assert eng._direct is not None and eng._store._direct is not None
+    assert isinstance(eng._direct, DirectIndexReader)
+    assert not isinstance(ref._direct, DirectIndexReader)
     n = ref.ix.meta.n_docs
     vocab = [
         r["term"]
@@ -227,15 +273,46 @@ def test_cold_query_runs_no_spark_frame_access(spark, docs, ixdir, contentdir, m
         ref.close()
 
 
-def test_direct_io_off_still_works(spark, ixdir, contentdir):
-    eng = SearchEngine.from_index_dir(
-        spark, ixdir, content_dir=contentdir, direct_io=False
+@pytest.mark.parametrize("stemmer", [None, "porter"])
+def test_in_memory_cold_query_serves_from_saved_copy(spark, docs, stemmer, monkeypatch):
+    """An in-memory engine (from_docs) serves cold queries from the
+    index copy it saved, without touching a Spark index frame: with
+    the dictionary not loaded at open and the frames poisoned, one-
+    and multi-term queries return the oracle's hits (doc_id, score)."""
+    monkeypatch.setattr(spec, "DRIVER_DICT_MAX_TERMS", 0)
+    rows = docs.select(
+        F.xxhash64("repo", "path", "commit").alias("doc_id"),
+        "repo", "path", "content",
+    ).collect()
+    norm = resolve_stemmer(stemmer)
+    want_ix = oracle.build_oracle_index([r.asDict() for r in rows], norm)
+    n = len(rows)
+
+    def fixed_point(t: str) -> bool:
+        # the oracle tokenizes the query without stemming, so query
+        # words must be their own normal form
+        toks = tokenize_py(t)
+        return toks == [t] and (
+            norm is None or norm.flat(tokenize_py(t, norm.token_re)) == [t]
+        )
+
+    common = sorted(
+        (t for t, p in want_ix.postings.items()
+         if 3 <= len(p) <= n // 2 and t not in spec.STOP_TOKENS and fixed_point(t)),
+        key=lambda t: (-len(want_ix.postings[t]), t),
     )
-    try:
-        assert eng._direct is None
-        assert [tuple(h) for h in eng.search("varint merge", limit=5).hits]
-    finally:
-        eng.close()
+    queries = [common[0], f"{common[1]} {common[4]}", f"{common[2]} {common[3]} {common[6]}"]
+    with SearchEngine.from_docs(spark, docs, n_shards=4, stemmer=stemmer) as eng:
+        assert not eng._dict_complete
+        real = (eng.ix.blocks, eng.ix.doc_stats, eng.ix.term_stats)
+        eng.ix.blocks = eng.ix.doc_stats = eng.ix.term_stats = _Boom()
+        try:
+            for q in queries:
+                want, _ = oracle.oracle_search(want_ix, q, limit=10)
+                got = [(int(h[0]), h[6]) for h in eng.search(q, limit=10).hits]
+                assert got == want, q
+        finally:
+            eng.ix.blocks, eng.ix.doc_stats, eng.ix.term_stats = real
 
 
 # ------------------------------------------------------- keep-ties cap
@@ -382,13 +459,16 @@ def test_tie_overflow_propagates_to_driver_diag(spark, dup_ix, monkeypatch):
 
 def test_repos_for_ids_matches_fetch_on_both_paths(spark, contentdir):
     """The slim (doc_id, repo) point read agrees with fetch()'s repo
-    column on the pyarrow-direct path AND the Spark fallback, including
-    absent ids (simply not returned, like fetch)."""
-    direct = ContentStore(spark, contentdir)
-    via_spark = ContentStore(spark, contentdir, direct=False)
-    ids = [r["doc_id"] for r in direct._df.select("doc_id").limit(7).collect()]
-    probe = ids + [999_999_999_001]  # absent id
-    want = {i: r["repo"] for i, r in direct.fetch(ids).items()}
-    assert direct.repos_for_ids(probe) == want
-    assert via_spark.repos_for_ids(probe) == want
-    assert direct.repos_for_ids([]) == {}
+    column on the pinned files AND with the Spark reference over the
+    store's frame, including absent ids (simply not returned, like
+    fetch)."""
+    store = ContentStore(spark, contentdir)
+    try:
+        ids = [r["doc_id"] for r in store._df.select("doc_id").limit(7).collect()]
+        probe = ids + [999_999_999_001]  # absent id
+        want = {i: r["repo"] for i, r in store.fetch(ids).items()}
+        assert store.repos_for_ids(probe) == want
+        assert _plan_repos(store, probe) == want
+        assert store.repos_for_ids([]) == {}
+    finally:
+        store.close()

@@ -1,14 +1,17 @@
 """Pinned-file serving reads (operators/direct_io.py ``PinnedTable``):
 
 - randomized point lookups return exactly the rows of the Spark frames
-  (blocks, doc_stats, term_stats, the content store), including OOV
-  keys, a shard dir holding several files, files with several row
-  groups and files written without statistics;
+  (blocks, doc_stats, term_stats, the content store's ``lookup_plan``
+  and frame), including OOV keys, a shard dir holding several files,
+  files with several row groups and files written without statistics;
 - a cold lookup of a one-shard term reads non-key columns from that
   one file only, and a warm repeat query opens and reads no file;
 - ``SearchEngine.close()`` releases every pinned file descriptor but
   leaves a content store the caller passed in open, and a failed pin
   leaves no file open;
+- an in-memory engine's saved index copy is removed by ``close()`` or,
+  for an engine dropped without it, by garbage collection, while a dir
+  the caller passed in is never removed;
 - an engine opened before an ``incremental_update`` on its dir keeps
   serving the snapshot it opened (it used to raise FileNotFoundError);
 - the block cache charges each entry its fixed overhead, so df=1 terms
@@ -22,6 +25,7 @@ import glob
 import os
 import random
 import shutil
+import tempfile
 
 import pyarrow.parquet as pq
 import pytest
@@ -222,20 +226,23 @@ def test_random_lookups_match_spark_frames(spark, reshaped):
     finally:
         rd.close()
 
-    direct = ContentStore(spark, cs_dir)
-    via_spark = ContentStore(spark, cs_dir, direct=False)
+    store = ContentStore(spark, cs_dir)
     try:
-        ids = [r["doc_id"] for r in via_spark._df.select("doc_id").collect()]
+        ids = [r["doc_id"] for r in store._df.select("doc_id").collect()]
         for trial in range(5):
             probe = rng.sample(ids, rng.randint(1, 15)) + [999_999_999_000 + trial]
-            a, b = direct.fetch(probe), via_spark.fetch(probe)
+            a = store.fetch(probe)
+            b = {r["doc_id"]: r for r in store.lookup_plan(probe).collect()}
             assert {i: r.asDict() for i, r in a.items()} == {
                 i: r.asDict() for i, r in b.items()
             }
             assert len(a) == len(probe) - 1
-            assert direct.repos_for_ids(probe) == via_spark.repos_for_ids(probe)
+            repos = store._df.filter(F.col("doc_id").isin(probe)).select("doc_id", "repo")
+            assert store.repos_for_ids(probe) == {
+                int(r["doc_id"]): r["repo"] for r in repos.collect()
+            }
     finally:
-        direct.close()
+        store.close()
 
 
 # -------------------------------------------------------- read counts
@@ -301,7 +308,7 @@ def test_close_releases_pinned_files(spark, state):
     pinned = sum(
         len(fs)
         for t in (eng._direct._blocks, eng._direct._doc_stats,
-                  eng._direct._term_stats, eng._store._direct._table)
+                  eng._direct._term_stats, eng._store._table)
         for fs in t.files.values()
     )
     assert _open_fds() >= before + pinned > before
@@ -345,6 +352,50 @@ def test_failed_pin_leaves_no_open_file(state):
     # collection may close its file, the failed pin itself must
     assert len(os.listdir("/proc/self/fd")) == before
     del failed
+
+
+def _tree(path: str) -> set:
+    return {os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs}
+
+
+@pytest.mark.skipif(not os.path.isdir("/proc/self/fd"), reason="needs /proc")
+def test_in_memory_engine_removes_its_saved_copy(spark, state):
+    """An index built in memory is served from a temp dir the engine
+    owns: close() removes it and releases every pinned file, and an
+    engine dropped without close() removes it once collected. A dir
+    the caller passed in (from_index_dir, or an Index with a path) is
+    never removed."""
+    docs = spark.createDataFrame(corpus.zipf_docs_pdf(60, 3, seed=5)).cache()
+    ix = I.build_index(docs, n_shards=2)
+    SearchEngine(spark, ix, docs).close()  # first open: Spark's own fds
+    before = _open_fds()
+    eng = SearchEngine(spark, ix, docs)
+    owned = eng._direct.index_dir
+    assert os.path.dirname(owned) == tempfile.gettempdir()
+    assert eng.search("common1 common2", limit=5).count > 0
+    eng.close()
+    assert not os.path.exists(owned)
+    assert _open_fds() == before
+
+    eng = SearchEngine.from_docs(spark, docs, n_shards=2)
+    owned = eng._direct.index_dir
+    assert os.path.isdir(owned)
+    del eng
+    gc.collect()
+    assert not os.path.exists(owned)
+
+    files = _tree(state["ix"])
+    for make in (
+        lambda: SearchEngine.from_index_dir(spark, state["ix"]),
+        lambda: SearchEngine(spark, I.load_index(spark, state["ix"]), None),
+    ):
+        make().close()
+        eng = make()
+        assert eng._direct.index_dir == state["ix"]
+        del eng
+        gc.collect()
+        assert _tree(state["ix"]) == files
+    docs.unpersist()
 
 
 # ------------------------------------------------- cache accounting
